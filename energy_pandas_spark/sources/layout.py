@@ -129,15 +129,15 @@ def compact(
     direct ``spark.read.parquet(path)`` of a crashed-mid-swap table
     fails (the data sits under ``__backup``). Readers that LIST before
     a concurrent swap commits can also race the backup delete — see
-    ``streaming/stats._swap``. Do not run two compactions or a
+    ``streaming/store.swap``. Do not run two compactions or a
     compaction and a writer concurrently on the same path."""
-    from energy_pandas_spark.streaming.stats import _swap
+    from energy_pandas_spark.streaming.store import swap
 
     if not recover_table(spark, path):
         raise FileNotFoundError(f"no table at {path} (and no __backup)")
     tmp = path.rstrip("/") + "__compacting"
     write_clustered(spark.read.parquet(path), tmp, cluster_by, num_files)
-    _swap(spark, tmp, path)
+    swap(spark, tmp, path)
 
 
 def recover_table(spark: SparkSession, path: str) -> bool:
@@ -145,9 +145,9 @@ def recover_table(spark: SparkSession, path: str) -> bool:
     crash (rename, metadata-only). Returns True when the table exists
     after the call. Safe to call unconditionally before reading a
     compacted table after an unclean shutdown."""
-    from energy_pandas_spark.streaming.stats import _recover_backup
+    from energy_pandas_spark.streaming.store import recover_backup
 
-    return _recover_backup(spark, path)
+    return recover_backup(spark, path)
 
 
 def file_column_stats(path: str, column: str) -> list[tuple[str, object, object]]:

@@ -39,7 +39,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from energy_pandas_spark.streaming.ingest import _read_or_none
+from energy_pandas_spark.streaming.store import (
+    land,
+    persist_scope,
+    read_history,
+    start,
+)
 
 __all__ = [
     "make_frontier_ingest_writer",
@@ -61,8 +66,6 @@ def make_frontier_ingest_writer(
     rows (columns ``(id, href, url)``) BEFORE canonicalization — e.g.
     keep only in-scope domains; out-of-scope links leave no store
     entry, so widening the scope later re-discovers them."""
-    from pyspark import StorageLevel
-
     from energy_pandas_spark.operators.urls import canonical_url, extract_links
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
@@ -83,60 +86,38 @@ def make_frontier_ingest_writer(
             .agg(F.count(F.lit(1)).alias("n_refs"))
             .withColumn("__h", F.xxhash64(F.lit("url-v1"), F.col("__curl")))
         )
-
-        # the batch's own pages count as seen from this batch on
-        page_hashes = (
-            batch.select(canonical_url(F.col(url_col)).alias("__curl"))
-            .filter(F.col("__curl").isNotNull())
-            .select(F.xxhash64(F.lit("url-v1"), F.col("__curl")).alias("__h"))
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        store = read_history(spark, seen_path, batch_id)
+        store_prev = (
+            store.select(F.col("h").alias("__h")) if store is not None else None
         )
-        try:
-            store = _read_or_none(spark, seen_path)
-            store_prev = (
-                store.filter(F.col("__batch_id") != batch_id).select(
-                    F.col("h").alias("__h")
+
+        with persist_scope() as persist:
+            # the batch's own pages count as seen from this batch on
+            page_hashes = persist(
+                batch.select(canonical_url(F.col(url_col)).alias("__curl"))
+                .filter(F.col("__curl").isNotNull())
+                .select(
+                    F.xxhash64(F.lit("url-v1"), F.col("__curl")).alias("__h")
                 )
-                if store is not None
-                else None
+                .distinct()
             )
             seen = page_hashes
             if store_prev is not None:
                 seen = seen.unionByName(store_prev)
-            fresh = cand.join(seen, "__h", "left_anti").persist(
-                StorageLevel.MEMORY_AND_DISK_DESER
+            fresh = persist(cand.join(seen, "__h", "left_anti"))
+            land(
+                fresh.select(F.col("__curl").alias("url"), "n_refs"),
+                frontier_path,
+                batch_id,
             )
-            try:
-                (
-                    fresh.select(
-                        F.col("__curl").alias("url"), "n_refs"
-                    )
-                    .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(frontier_path)
-                )
-                # store additions are de-duped against history too: a
-                # fetched page was usually frontier-emitted earlier, and
-                # re-appending its hash every batch would grow the store
-                # by one corpus per crawl cycle
-                new_hashes = fresh.select("__h").unionByName(page_hashes).distinct()
-                if store_prev is not None:
-                    new_hashes = new_hashes.join(store_prev, "__h", "left_anti")
-                (
-                    new_hashes.select(F.col("__h").alias("h"))
-                    .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(seen_path)
-                )
-            finally:
-                fresh.unpersist()
-        finally:
-            page_hashes.unpersist()
+            # store additions are de-duped against history too: a
+            # fetched page was usually frontier-emitted earlier, and
+            # re-appending its hash every batch would grow the store
+            # by one corpus per crawl cycle
+            new_hashes = fresh.select("__h").unionByName(page_hashes).distinct()
+            if store_prev is not None:
+                new_hashes = new_hashes.join(store_prev, "__h", "left_anti")
+            land(new_hashes.select(F.col("__h").alias("h")), seen_path, batch_id)
 
     return write_batch
 
@@ -151,12 +132,7 @@ def frontier_ingest(
 ):
     """Start the frontier query; returns the StreamingQuery."""
     write_batch = make_frontier_ingest_writer(frontier_path, seen_path, **kwargs)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_frontier(

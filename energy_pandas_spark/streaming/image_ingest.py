@@ -26,7 +26,7 @@ Per micro-batch (foreachBatch):
 4. accepted media land in the media table, their signatures in the
    phash store — both ``partitionBy('__batch_id')`` with dynamic
    partition overwrite: a replayed batch overwrites exactly its own
-   partitions (the shared idempotency contract).
+   partitions (the store contract ``streaming/store.py`` states).
 
 Scale shape: image BYTES never shuffle — they are written straight
 from the (persisted) batch; every join moves (band, bucket, sig)
@@ -38,6 +38,13 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from energy_pandas_spark.streaming.store import (
+    land,
+    persist_scope,
+    read_history,
+    start,
+)
 
 __all__ = ["make_image_ingest_writer", "image_ingest", "read_phash_store"]
 
@@ -64,28 +71,30 @@ def make_image_ingest_writer(
         decode_features,
         perceptual_hash,
     )
-    from energy_pandas_spark.streaming.ingest import _read_or_none
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.persist()
-        phashed = perceptual_hash(
-            decode_features(
-                batch, dim=64, id_col=id_col,
-                content_col=content_col, meta_col=meta_col,
-                strict=strict,
-            ),
-            "features",
-            id_col,
-        ).persist()
-        # strict=False leaves phash NULL for images the decoder cannot
-        # handle: those rows are KEPT in the media corpus (an
-        # undecodable input is not evidence of duplication — the same
-        # posture as url_ingest's NULL-canonical rows) but contribute
-        # no signature to the store.
-        sigs = phashed.filter(F.col("phash").isNotNull())
-        undecodable = phashed.filter(F.col("phash").isNull()).select(id_col)
-        try:
+        with persist_scope() as persist:
+            batch = persist(batch)
+            phashed = persist(
+                perceptual_hash(
+                    decode_features(
+                        batch, dim=64, id_col=id_col,
+                        content_col=content_col, meta_col=meta_col,
+                        strict=strict,
+                    ),
+                    "features",
+                    id_col,
+                )
+            )
+            # strict=False leaves phash NULL for images the decoder cannot
+            # handle: those rows are KEPT in the media corpus (an
+            # undecodable input is not evidence of duplication — the same
+            # posture as url_ingest's NULL-canonical rows) but contribute
+            # no signature to the store.
+            sigs = phashed.filter(F.col("phash").isNotNull())
+            undecodable = phashed.filter(F.col("phash").isNull()).select(id_col)
+
             # 1. in-batch near-dup clusters, smallest id survives
             pairs = hamming_neardup_pairs(
                 sigs, id_col=id_col, sig_col="phash",
@@ -98,46 +107,26 @@ def make_image_ingest_writer(
             )
             fresh_sigs = sigs.join(drops, id_col, "left_anti")
 
-            # 2. cross-store rejection (excluding this batch's own
-            # half-written partition on replay)
-            store = _read_or_none(spark, phash_path)
+            # 2. cross-store rejection against history
+            store = read_history(spark, phash_path, batch_id)
             if store is not None:
-                hist = store.filter(
-                    F.col("__batch_id") != batch_id
-                ).select("phash")
                 hit = hamming_cross_hits(
-                    fresh_sigs, hist, id_col=id_col, sig_col="phash",
-                    max_hamming=max_hamming, max_bucket=max_bucket,
+                    fresh_sigs, store.select("phash"), id_col=id_col,
+                    sig_col="phash", max_hamming=max_hamming,
+                    max_bucket=max_bucket,
                 )
                 fresh_sigs = fresh_sigs.join(hit, id_col, "left_anti")
-            fresh_sigs = fresh_sigs.withColumn(
-                "__batch_id", F.lit(batch_id).cast("long")
-            ).persist()
+            fresh_sigs = persist(fresh_sigs)
 
             # 3. idempotent landing: media rows for accepted ids +
-            # their signatures, each overwriting exactly this batch's
-            # partition
+            # their signatures
             accepted = batch.join(
                 fresh_sigs.select(id_col).unionByName(undecodable),
                 id_col,
                 "left_semi",
-            ).withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            (
-                accepted.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(media_path)
             )
-            (
-                fresh_sigs.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(phash_path)
-            )
-            fresh_sigs.unpersist()
-        finally:
-            phashed.unpersist()
-            batch.unpersist()
+            land(accepted, media_path, batch_id)
+            land(fresh_sigs, phash_path, batch_id)
 
     return write_batch
 
@@ -152,12 +141,7 @@ def image_ingest(
 ):
     """Start the ingest query; returns the StreamingQuery."""
     write_batch = make_image_ingest_writer(media_path, phash_path, **kwargs)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_phash_store(spark: SparkSession, phash_path: str) -> DataFrame:

@@ -21,7 +21,7 @@ Per micro-batch (foreachBatch):
 5. accepted docs land partitioned by ``__batch_id`` with dynamic
    partition overwrite, and the fresh digests append to the store the
    same way — a replayed batch overwrites exactly its own partitions,
-   the idempotency contract ``streaming/ingest.py`` documents.
+   the store contract ``streaming/store.py`` states.
 
 Scale shape: per-batch cost is the batch explode (map-side), one
 digest aggregate, and one anti-join against the store — the store scan
@@ -36,7 +36,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from energy_pandas_spark.streaming.ingest import _read_or_none
+from energy_pandas_spark.streaming.store import (
+    land,
+    persist_scope,
+    read_history,
+    start,
+)
 
 __all__ = [
     "make_line_dedup_ingest_writer",
@@ -61,42 +66,37 @@ def make_line_dedup_ingest_writer(
     BEFORE dedup (e.g. ``operators.text.gopher_filter``) — rejected
     documents contribute no digests, so they can never block a later
     good document's lines."""
-    from pyspark import StorageLevel
-
     from energy_pandas_spark.operators.text import _line_rows
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         if pre_filter is not None:
             batch = pre_filter(batch)
-        # persist: the batch source feeds the line explosion AND the
-        # final non-text-column join — without this an availableNow
-        # file source re-reads the batch's input files per consumer
-        batch = batch.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        lines = (
-            _line_rows(batch, text_col, id_col, sep)
-            .withColumn(
-                "pos",
-                F.struct(
-                    F.col(id_col).cast("long").alias("i"),
-                    F.col("idx").alias("x"),
-                ),
+        with persist_scope() as persist:
+            # persist: the batch source feeds the line explosion AND the
+            # final non-text-column join — without this an availableNow
+            # file source re-reads the batch's input files per consumer
+            batch = persist(batch)
+            lines = persist(
+                _line_rows(batch, text_col, id_col, sep)
+                .withColumn(
+                    "pos",
+                    F.struct(
+                        F.col(id_col).cast("long").alias("i"),
+                        F.col("idx").alias("x"),
+                    ),
+                )
+                .withColumn("h", F.xxhash64(F.lit("line-v1"), F.col("key")))
             )
-            .withColumn("h", F.xxhash64(F.lit("line-v1"), F.col("key")))
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        )
-        try:
-            store = _read_or_none(spark, digests_path)
-            if store is not None:
-                store = store.filter(F.col("__batch_id") != batch_id).select("h")
+            store = read_history(spark, digests_path, batch_id)
             winners = (
                 lines.filter(F.col("key").isNotNull())
                 .groupBy("h")
                 .agg(F.min("pos").alias("win"))
             )
             if store is not None:
-                winners = winners.join(store, "h", "left_anti")
-            winners = winners.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+                winners = winners.join(store.select("h"), "h", "left_anti")
+            winners = persist(winners)
 
             kept = (
                 lines.join(winners, "h", "left")
@@ -130,11 +130,9 @@ def make_line_dedup_ingest_writer(
                 # inner join here would silently drop it — LEFT join
                 # + coalesce mirrors the batch contract
                 how = "left"
-            out = (
-                batch.select(*[c for c in batch.columns if c != text_col])
-                .join(kept, id_col, how)
-                .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            )
+            out = batch.select(
+                *[c for c in batch.columns if c != text_col]
+            ).join(kept, id_col, how)
             if not drop_empty:
                 out = out.withColumn(
                     text_col, F.coalesce(F.col(text_col), F.lit(""))
@@ -142,24 +140,8 @@ def make_line_dedup_ingest_writer(
                     "n_lines_kept",
                     F.coalesce(F.col("n_lines_kept"), F.lit(0).cast("long")),
                 )
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(corpus_path)
-            )
-            (
-                winners.select("h")
-                .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(digests_path)
-            )
-            winners.unpersist()
-        finally:
-            lines.unpersist()
-            batch.unpersist()
+            land(out, corpus_path, batch_id)
+            land(winners.select("h"), digests_path, batch_id)
 
     return write_batch
 
@@ -176,12 +158,7 @@ def line_dedup_ingest(
     write_batch = make_line_dedup_ingest_writer(
         corpus_path, digests_path, **kwargs
     )
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_line_corpus(spark: SparkSession, corpus_path: str) -> DataFrame:

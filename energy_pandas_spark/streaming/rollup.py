@@ -33,6 +33,13 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
+from energy_pandas_spark.streaming.store import (
+    land,
+    persist_scope,
+    read_store,
+    start,
+)
+
 __all__ = ["continuous_rollup", "make_rollup_writer", "rollup_batch"]
 
 
@@ -123,8 +130,8 @@ def make_rollup_writer(
         # sibling ingest writers persist for the same multi-consumer
         # reason — without it an availableNow file source re-reads and
         # re-aggregates the batch input per consumer)
-        fresh = agg_fn(batch).persist()
-        try:
+        with persist_scope() as persist:
+            fresh = persist(agg_fn(batch))
             days = [r[0] for r in fresh.select("day").distinct().collect()]
             if not days:
                 write_marker(spark, batch_id)
@@ -175,10 +182,12 @@ def make_rollup_writer(
                     f"would be treated as grouping keys and duplicate "
                     f"rows per window on merge"
                 )
-            try:
-                existing = spark.read.parquet(path).filter(
-                    F.col("day").isin(days)
-                )
+            # None on the first batch; an unreadable table raises
+            # rather than reading as empty, which would overwrite the
+            # touched days with this batch's aggregate alone
+            existing = read_store(spark, path)
+            if existing is not None:
+                existing = existing.filter(F.col("day").isin(days))
                 if "__batch_id" not in existing.columns:  # pre-stamp table
                     existing = existing.withColumn(
                         "__batch_id", F.lit(-1).cast("long")
@@ -190,9 +199,6 @@ def make_rollup_writer(
                     existing = existing.withColumn(
                         "n_values", F.col("n_events")
                     )
-            except Exception:  # first batch: nothing to merge
-                existing = None
-            if existing is not None:
                 # replay guard: whole partitions are swapped atomically,
                 # so a day stamped with this batch's id (or a later one)
                 # already contains this batch's contribution — leave it
@@ -242,24 +248,8 @@ def make_rollup_writer(
                 merged = merged.select(*fresh.columns)
             else:
                 merged = fresh
-            merged = merged.withColumn(
-                "__batch_id", F.lit(batch_id).cast("long")
-            )
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            try:
-                merged.write.mode("overwrite").partitionBy("day").parquet(path)
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+            land(merged, path, batch_id, by=("day",))
             write_marker(spark, batch_id)
-        finally:
-            fresh.unpersist()
 
     return write_batch
 
@@ -283,9 +273,4 @@ def continuous_rollup(
     union, which is exact because the stored grain equals the query
     grain)."""
     write_batch = make_rollup_writer(path, window, accumulate, measures)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)

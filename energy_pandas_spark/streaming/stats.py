@@ -3,10 +3,11 @@ table up to date from a stream without ever rescanning history.
 
 Each micro-batch reduces to per-key batch sketches (one map-combined
 aggregate over the batch only), unions them with the stored sketches,
-and swaps the tiny sketch table atomically (stage + rename, same
-pattern as ``sources.layout.compact``). Any rollup level then reads
-off the table via ``operators.sketches.merge_cardinality`` — no scan
-of the underlying events, ever.
+and swaps the tiny sketch table atomically (the stage + rename swap
+protocol of ``streaming/store.py``, shared with
+``sources.layout.compact``). Any rollup level then reads off the table
+via ``operators.sketches.merge_cardinality`` — no scan of the
+underlying events, ever.
 
 Replay safety comes from the algebra, not bookkeeping: an HLL sketch
 is a vector of register maxima and union is element-wise ``max``, so
@@ -22,6 +23,8 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from energy_pandas_spark.streaming.store import land, read_store, start, swap
+
 __all__ = [
     "make_cardinality_writer",
     "continuous_cardinality",
@@ -33,72 +36,6 @@ __all__ = [
     "continuous_portable_hll",
     "read_portable_hll",
 ]
-
-
-def _fs_path(spark: SparkSession, p: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(p)
-    return path.getFileSystem(conf), path
-
-
-def _swap(spark: SparkSession, tmp: str, path: str) -> None:
-    """Crash-safe table swap via a backup rename (HDFS rename is atomic;
-    a bare delete-then-rename has a window where the table is simply
-    gone, which silently discards all history on replay):
-
-    1. drop any stale ``__backup`` left by a crash after a prior step 3,
-    2. rename current -> ``__backup`` (old data is never deleted while
-       it is the only copy),
-    3. rename staging -> current,
-    4. drop ``__backup``.
-
-    A crash between 2 and 3 leaves the old table intact under
-    ``__backup``; ``_read_table`` restores it before the replayed batch
-    re-merges, so the documented all-or-nothing guarantee holds.
-
-    Reader caveat: the guarantee is for reads that LIST the directory
-    after a swap completes. A lazy DataFrame whose file listing was
-    captured BEFORE a swap races the step-4 backup delete — its action
-    can hit missing files. Callers that hold reads across maintenance
-    commits must re-read (or collect eagerly); the sketch tables are
-    1-file coalesced precisely so eager reads are cheap."""
-    fs, dst = _fs_path(spark, path)
-    _, src = _fs_path(spark, tmp)
-    _, bak = _fs_path(spark, path.rstrip("/") + "__backup")
-    fs.delete(bak, True)
-    if fs.exists(dst) and not fs.rename(dst, bak):
-        raise IOError(f"sketch table backup {path} failed")
-    if not fs.rename(src, dst):
-        if fs.exists(bak):  # restore so the table is never lost
-            fs.rename(bak, dst)
-        raise IOError(f"sketch table swap {tmp} -> {path} failed")
-    fs.delete(bak, True)
-
-
-def _recover_backup(spark: SparkSession, path: str) -> bool:
-    """If ``path`` is missing but a ``__backup`` from an interrupted
-    :func:`_swap` survives, restore it. Returns True when the table
-    exists after the call. Shared by the sketch readers and
-    ``sources/layout.compact``."""
-    fs, dst = _fs_path(spark, path)
-    if not fs.exists(dst):
-        _, bak = _fs_path(spark, path.rstrip("/") + "__backup")
-        if fs.exists(bak):
-            fs.rename(bak, dst)
-    return bool(fs.exists(dst))
-
-
-def _read_table(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read the sketch table, restoring from ``__backup`` if a crash
-    landed between ``_swap`` steps 2 and 3. Returns None ONLY if the
-    table has never been written — any other read failure (corrupt
-    footer, transient FS error) propagates, because treating it as
-    "no table" would make the next batch swap the whole accumulated
-    history away and delete it."""
-    if not _recover_backup(spark, path):
-        return None
-    return spark.read.parquet(path)
 
 
 def make_cardinality_writer(
@@ -116,7 +53,7 @@ def make_cardinality_writer(
         fresh = batch.groupBy(*keys).agg(
             F.hll_sketch_agg(F.col(value_col), F.lit(lgk)).alias("hll")
         )
-        existing = _read_table(spark, path)  # None on first batch
+        existing = read_store(spark, path)  # None on first batch
         if existing is not None:
             merged = (
                 existing.unionByName(fresh)
@@ -127,7 +64,7 @@ def make_cardinality_writer(
             merged = fresh
         tmp = path.rstrip("/") + "__staging"
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap(spark, tmp, path)
+        swap(spark, tmp, path)
 
     return write_batch
 
@@ -143,12 +80,7 @@ def continuous_cardinality(
 ):
     """Start the maintenance query; returns the StreamingQuery."""
     write_batch = make_cardinality_writer(path, key_cols, value_col, lgk)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_cardinality(
@@ -160,7 +92,7 @@ def read_cardinality(
     table alone."""
     from energy_pandas_spark.operators.sketches import merge_cardinality
 
-    table = _read_table(spark, path)
+    table = read_store(spark, path)
     if table is None:
         raise FileNotFoundError(f"no sketch table at {path}")
     return merge_cardinality(table, by=by)
@@ -193,7 +125,7 @@ def make_quantile_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        existing = _read_table(spark, path)
+        existing = read_store(spark, path)
         if existing is not None:
             high = existing.agg(F.max("__batch_id")).collect()[0][0]
             if high is not None and batch_id <= high:
@@ -215,7 +147,7 @@ def make_quantile_writer(
         merged = merged.withColumn("__batch_id", F.lit(batch_id).cast("long"))
         tmp = path.rstrip("/") + "__staging"
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap(spark, tmp, path)
+        swap(spark, tmp, path)
 
     return write_batch
 
@@ -231,12 +163,7 @@ def continuous_quantiles(
 ):
     """Start the KLL quantile-table maintenance query."""
     write_batch = make_quantile_writer(path, key_cols, value_col, k)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_quantiles(
@@ -248,7 +175,7 @@ def read_quantiles(
     """Quantile estimates at any rollup level from the sketch table."""
     from energy_pandas_spark.operators.sketches import merge_quantiles
 
-    table = _read_table(spark, path)
+    table = read_store(spark, path)
     if table is None:
         raise FileNotFoundError(f"no sketch table at {path}")
     return merge_quantiles(table, quantiles, by=by, sketch_col="kll")
@@ -273,7 +200,7 @@ def make_cm_writer(
     sparse sketches partitioned by ``__batch_id`` with dynamic
     partition overwrite: a replay rewrites exactly its own partition,
     nothing merges at write time, and no swap protocol is needed
-    (append-only idempotent landing, the ingest-store contract).
+    (the store contract ``streaming/store.py`` states).
     ``read_cm`` merges at read time — one integer (row, col) sum over
     batches * depth * width longs, executor-trivial at any horizon."""
     from energy_pandas_spark.operators.sketches import cm_sketch
@@ -285,13 +212,7 @@ def make_cm_writer(
             batch, value_col, by=keys, depth=depth, width=width,
             hasher=hasher,
         )
-        (
-            sk.withColumn("__batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id")
-            .parquet(path)
-        )
+        land(sk, path, batch_id)
 
     return write_batch
 
@@ -309,12 +230,7 @@ def continuous_cm(
 ):
     """Start the maintenance query; returns the StreamingQuery."""
     write_batch = make_cm_writer(path, value_col, by, depth, width, hasher)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_cm(
@@ -326,7 +242,7 @@ def read_cm(
     ``operators.sketches.cm_query`` for point estimates."""
     from energy_pandas_spark.operators.sketches import cm_merge
 
-    table = _read_table(spark, path)
+    table = read_store(spark, path)
     if table is None:
         raise FileNotFoundError(f"no sketch table at {path}")
     return cm_merge(table.drop("__batch_id"), by=by)
@@ -360,7 +276,7 @@ def make_portable_hll_writer(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         fresh = hll_registers(batch, value_col, by=keys, lgm=lgm)
-        existing = _read_table(spark, path)  # None on first batch
+        existing = read_store(spark, path)  # None on first batch
         merged = (
             hll_merge(existing.unionByName(fresh), by=keys)
             if existing is not None
@@ -368,7 +284,7 @@ def make_portable_hll_writer(
         )
         tmp = path.rstrip("/") + "__staging"
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap(spark, tmp, path)
+        swap(spark, tmp, path)
 
     return write_batch
 
@@ -384,12 +300,7 @@ def continuous_portable_hll(
 ):
     """Start the maintenance query; returns the StreamingQuery."""
     write_batch = make_portable_hll_writer(path, key_cols, value_col, lgm)
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_portable_hll(
@@ -407,11 +318,11 @@ def read_portable_hll(
         hll_merge,
     )
 
-    # through _read_table like every other sketch reader: recovers the
-    # __backup left by a writer that crashed between the two _swap
+    # through read_store like every other sketch reader: recovers the
+    # __backup left by a writer that crashed between the two swap
     # renames (a bare spark.read.parquet would raise PATH_NOT_FOUND in
     # exactly that window)
-    regs = _read_table(spark, path)
+    regs = read_store(spark, path)
     if regs is None:
         raise FileNotFoundError(f"no portable-HLL table at {path}")
     return hll_estimate(hll_merge(regs, by=by), by=by, lgm=lgm)

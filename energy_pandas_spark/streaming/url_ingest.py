@@ -22,7 +22,7 @@ Per micro-batch (foreachBatch):
 4. accepted documents land partitioned by ``__batch_id`` with dynamic
    partition overwrite; their URL hashes append to the store the same
    way — a replayed batch overwrites exactly its own partitions (the
-   idempotency contract ``streaming/ingest.py`` documents).
+   store contract ``streaming/store.py`` states).
 
 Rows whose URL does not canonicalize (NULL) are kept unconditionally
 and leave no store entry: an unparseable URL is not evidence of
@@ -42,7 +42,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from energy_pandas_spark.streaming.ingest import _read_or_none
+from energy_pandas_spark.streaming.store import (
+    land,
+    persist_scope,
+    read_history,
+    start,
+)
 
 __all__ = [
     "make_url_dedup_ingest_writer",
@@ -63,8 +68,6 @@ def make_url_dedup_ingest_writer(
     dedup/replay behavior). ``pre_filter`` is an optional quality gate
     applied BEFORE dedup — rejected documents leave no URL hashes, so
     they can never block a later good copy of the same page."""
-    from pyspark import StorageLevel
-
     from energy_pandas_spark.operators.urls import (
         canonical_url,
         survivor_expr,
@@ -74,10 +77,10 @@ def make_url_dedup_ingest_writer(
         spark = batch.sparkSession
         if pre_filter is not None:
             batch = pre_filter(batch)
-        canon = batch.withColumn(
-            "__curl", canonical_url(F.col(url_col))
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        try:
+        with persist_scope() as persist:
+            canon = persist(
+                batch.withColumn("__curl", canonical_url(F.col(url_col)))
+            )
             with_url = canon.filter(F.col("__curl").isNotNull()).withColumn(
                 "__h", F.xxhash64(F.lit("url-v1"), F.col("__curl"))
             )
@@ -87,44 +90,25 @@ def make_url_dedup_ingest_writer(
                 survivor_expr(id_col, quality_col),
                 F.count(F.lit(1)).alias("__n_copies"),
             )
-            store = _read_or_none(spark, urls_path)
+            store = read_history(spark, urls_path, batch_id)
             if store is not None:
-                store = store.filter(
-                    F.col("__batch_id") != batch_id
-                ).select(F.col("h").alias("__h"))
-                winners = winners.join(store, "__h", "left_anti")
-            winners = winners.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-            try:
-                kept_ids = winners.select(id_col, "__n_copies")
-                out = (
-                    canon.filter(F.col("__curl").isNull())
+                winners = winners.join(
+                    store.select(F.col("h").alias("__h")), "__h", "left_anti"
+                )
+            winners = persist(winners)
+            kept_ids = winners.select(id_col, "__n_copies")
+            out = (
+                canon.filter(F.col("__curl").isNull())
+                .drop("__curl")
+                .withColumn("__n_copies", F.lit(1).cast("long"))
+                .unionByName(
+                    canon.filter(F.col("__curl").isNotNull())
                     .drop("__curl")
-                    .withColumn("__n_copies", F.lit(1).cast("long"))
-                    .unionByName(
-                        canon.filter(F.col("__curl").isNotNull())
-                        .drop("__curl")
-                        .join(kept_ids, id_col)
-                    )
-                    .withColumn("__batch_id", F.lit(batch_id).cast("long"))
+                    .join(kept_ids, id_col)
                 )
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(corpus_path)
-                )
-                (
-                    winners.select(F.col("__h").alias("h"))
-                    .withColumn("__batch_id", F.lit(batch_id).cast("long"))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("__batch_id")
-                    .parquet(urls_path)
-                )
-            finally:
-                winners.unpersist()
-        finally:
-            canon.unpersist()
+            )
+            land(out, corpus_path, batch_id)
+            land(winners.select(F.col("__h").alias("h")), urls_path, batch_id)
 
     return write_batch
 
@@ -141,12 +125,7 @@ def url_dedup_ingest(
     write_batch = make_url_dedup_ingest_writer(
         corpus_path, urls_path, **kwargs
     )
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start(stream, write_batch, checkpoint, trigger_available_now)
 
 
 def read_url_corpus(spark: SparkSession, corpus_path: str) -> DataFrame:

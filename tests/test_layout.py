@@ -175,11 +175,11 @@ def test_write_training_shards_deterministic(spark, tmp_path):
 def test_compact_survives_crash_window(spark, tmp_path):
     """compact's swap now uses the backup-rename protocol: simulate the
     crash window (table renamed to backup, new table not yet landed) and
-    check readers recover the data via streaming.stats._read_table."""
+    check readers recover the data via streaming.store.read_store."""
     import shutil
 
     from energy_pandas_spark.sources.layout import compact, write_clustered
-    from energy_pandas_spark.streaming.stats import _read_table
+    from energy_pandas_spark.streaming.store import read_store
 
     p = str(tmp_path / "t")
     df = spark.range(1000).withColumnRenamed("id", "k")
@@ -188,7 +188,7 @@ def test_compact_survives_crash_window(spark, tmp_path):
     assert spark.read.parquet(p).count() == 1000
 
     shutil.move(p, p + "__backup")  # crash between the two renames
-    recovered = _read_table(spark, p)
+    recovered = read_store(spark, p)
     assert recovered is not None and recovered.count() == 1000
 
 

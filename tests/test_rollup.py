@@ -231,7 +231,7 @@ def test_continuous_quantiles_merge_and_replay_guard(spark, tmp_path):
 
 
 def test_sketch_swap_crash_recovery(spark, tmp_path):
-    """Simulate a crash between _swap's backup-rename and staging-rename:
+    """Simulate a crash between swap's backup-rename and staging-rename:
     the table dir is gone but __backup holds the old data. The next read
     (replayed batch or user query) must restore it — history is never lost."""
     import shutil
@@ -290,22 +290,45 @@ def test_quantile_labels_never_collide(spark):
     assert row["q_99_9"] <= row["q_100"] == 999.0
 
 
-def test_read_table_corruption_does_not_wipe_history(spark, tmp_path):
-    """A corrupt sketch table must FAIL the batch (retryable), not be
-    treated as 'never written' — that path swaps the history away."""
-    import pytest as _pt
+def test_unreadable_rollup_day_fails_the_batch(spark, tmp_path):
+    """A rollup day whose parquet cannot be read must FAIL the batch.
+    Read as 'first batch', the dynamic overwrite would replace the day
+    with the new batch's aggregate alone and lose its history."""
+    import glob
+    import shutil
 
-    from energy_pandas_spark.streaming.stats import _read_table
+    import pytest
 
-    p = str(tmp_path / "tbl")
-    import os
+    from energy_pandas_spark.streaming.rollup import make_rollup_writer
 
-    os.makedirs(p)
-    with open(os.path.join(p, "part-0.parquet"), "wb") as f:
+    out = str(tmp_path / "rollup")
+    src0, src1 = str(tmp_path / "src0"), str(tmp_path / "src1")
+    _write_batchfile(
+        spark,
+        [
+            (0, "2024-01-01 10:00:00", 1, "click", 1.0, "{}"),
+            (1, "2024-01-01 10:10:00", 1, "click", 2.0, "{}"),
+        ],
+        src0,
+    )
+    _write_batchfile(
+        spark, [(2, "2024-01-01 10:20:00", 1, "click", 4.0, "{}")], src1
+    )
+    write_batch = make_rollup_writer(out)
+    write_batch(spark.read.parquet(src0), 0)
+    row = spark.read.parquet(out).collect()[0]
+    assert (row.n_events, row.sum_value) == (2, 3.0)
+
+    (day_file,) = glob.glob(f"{out}/day=2024-01-01/*.parquet")
+    with open(day_file, "wb") as f:
         f.write(b"not parquet at all")
-    with _pt.raises(Exception):
-        _read_table(spark, p)  # must raise, NOT return None
-    assert _read_table(spark, str(tmp_path / "never_written")) is None
+    shutil.rmtree(out + "__high_water")
+    with pytest.raises(Exception):
+        write_batch(spark.read.parquet(src1), 1)
+    # the day was left alone, not overwritten by batch 1's aggregate
+    assert glob.glob(f"{out}/day=2024-01-01/*.parquet") == [day_file]
+    with open(day_file, "rb") as f:
+        assert f.read() == b"not parquet at all"
 
 
 class TestCountMin:
@@ -723,10 +746,10 @@ def test_declared_custom_measure_merges_exactly(spark, tmp_path):
 
 
 def test_read_portable_hll_recovers_interrupted_swap(spark, tmp_path):
-    """Crash window between _swap's backup rename and the staging
+    """Crash window between swap's backup rename and the staging
     rename: the table exists only as ``__backup``. Every sketch reader
-    must restore it — read_portable_hll used to bypass _read_table and
-    raise PATH_NOT_FOUND here."""
+    must restore it — read_portable_hll used to bypass the store reader
+    and raise PATH_NOT_FOUND here."""
     import os
 
     from energy_pandas_spark.streaming.stats import (

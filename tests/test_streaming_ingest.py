@@ -107,24 +107,3 @@ def test_ingest_streaming_end_to_end(spark, tmp_path):
     got = {r.doc_id for r in read_corpus(spark, str(tmp_path / "corpus")).collect()}
     # 0/1 are near-dups of each other: exactly one survives, plus OTHER
     assert 2 in got and len(got) == 2 and (0 in got) != (1 in got)
-
-
-def test_corrupt_store_raises_instead_of_double_ingesting(spark, tmp_path):
-    """An unreadable store must FAIL the batch, not read as 'no
-    history' — that would silently re-ingest every duplicate. Only a
-    data-less directory counts as an empty store."""
-    import pytest as _pytest
-
-    from energy_pandas_spark.streaming.ingest import _read_or_none
-
-    # empty dir (crash after mkdir): legitimately no store
-    empty = tmp_path / "empty_store"
-    empty.mkdir()
-    assert _read_or_none(spark, str(empty)) is None
-
-    # corrupt store: a non-parquet file where the table should be
-    corrupt = tmp_path / "corrupt_store"
-    corrupt.mkdir()
-    (corrupt / "part-00000.parquet").write_bytes(b"not parquet at all")
-    with _pytest.raises(Exception):
-        _read_or_none(spark, str(corrupt))
